@@ -16,7 +16,7 @@ SF_DIR ?= /root/testdata/sf0.1
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: round-artifacts sweep funnel ingest bench replica test
+.PHONY: round-artifacts sweep funnel ingest bench replica test tier1
 
 round-artifacts: sweep funnel ingest bench replica
 
@@ -41,6 +41,9 @@ bench:  # writes BENCH_local.json (full report) + results.csv; prints the short 
 
 test:
 	python -m pytest tests/ -x -q
+
+tier1:  # the ROADMAP Tier-1 verify command, verbatim
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 REV ?= HEAD~1
 bench-diff:  # flag per-query p50 regressions vs a prior committed BENCH_local.json

@@ -10,7 +10,7 @@ as Arrow-batched pandas UDFs in the genuinely-non-relational operators.
 Layout:
     session      — tuned SparkSession builder (local + cluster profiles)
     schemas      — explicit StructTypes (no inference in production paths)
-    sources      — batch/stream readers + writers (parquet, CSV seeds, CDC)
+    sources      — batch/stream readers + writers (parquet, seed dims, CDC)
     functions    — scalar column builders (time, money, text, vectors)
     operators    — the operator catalog (silver, gold, dedup, similarity…)
     plans        — model-DAG runner + contracts

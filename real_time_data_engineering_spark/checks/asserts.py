@@ -1,16 +1,24 @@
-"""dbt-style assertion library (reference test classes, SURVEY.md §5).
+"""dbt/Soda-style assertion library (reference test classes, SURVEY.md §5).
 
-Each check compiles to a DataFrame whose rows are *violations* — the
-check passes when the frame is empty, exactly like a compiled dbt test.
-``run_checks`` produces the reference's N/N PASS accounting.
+Every check is a ``Check``: one aggregate over a table plus the bounds
+it must fall in. The dbt row-level tests (not_null, unique,
+accepted_values, accepted_range, positive_value, singular) count their
+violating rows, bounded above by 0 — the check passes when that count
+is 0, exactly like a compiled dbt test. Soda metrics bound one table
+aggregate (row_count, avg, min, ...), and source freshness is a lower
+bound on ``max(ts)``.
 
-Checks are lazy single-action queries (one count per check); at scale
-they run as narrow aggregations over the scanned table, and a batch of
-checks over one model can share the scan via ``summarize``.
+``evaluate`` runs all the checks for one table as ONE aggregation — one
+scan however many checks (the shared-scan shape of Deequ's analyzers),
+which is the form that survives 100 TB. ``relationships`` is a left-anti
+join whose orphans ``evaluate`` counts; ``expect_schema`` compares
+schemas and runs no Spark action. ``run_checks`` produces the
+reference's N/N PASS accounting.
 """
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Iterable
 from dataclasses import dataclass
 
@@ -28,27 +36,100 @@ class CheckResult:
     detail: str = ""
 
 
-def _violations(name: str, df: DataFrame, severity: str = "error") -> CheckResult:
-    n = df.limit(1001).count()
-    return CheckResult(name=name, passed=n == 0, failing_rows=n, severity=severity)
+@dataclass(frozen=True, eq=False)
+class Check:
+    """``value`` (an aggregate over the checked table) must lie in
+    [lo, hi]; either side open when None. A NULL value fails."""
+
+    name: str
+    value: Column
+    lo: object = None
+    hi: object = None
+    severity: str = "error"
+
+    def result(self, v) -> CheckResult:
+        ok = v is not None and (self.lo is None or v >= self.lo) and (self.hi is None or v <= self.hi)
+        # a count bounded above by 0 counts violating rows: report them
+        counts_rows = self.lo is None and self.hi == 0
+        failing = 0 if ok else int(v) if counts_rows else 1
+        return CheckResult(self.name, bool(ok), failing, self.severity, f"observed {v}")
 
 
-def not_null(df: DataFrame, cols: Iterable[str], model: str = "") -> list[CheckResult]:
-    return [
-        _violations(f"not_null:{model}.{c}", df.filter(F.col(c).isNull())) for c in cols
-    ]
+def evaluate(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
+    """Every check over ``df`` in one ``df.agg(...).first()``."""
+    row = df.agg(*[c.value.alias(f"_c{i}") for i, c in enumerate(checks)]).first()
+    return [c.result(row[i]) for i, c in enumerate(checks)]
 
 
-def unique(df: DataFrame, col: str, model: str = "") -> CheckResult:
-    dups = df.groupBy(col).count().filter(F.col("count") > 1)
-    return _violations(f"unique:{model}.{col}", dups)
+def _duplicate_count(col: str) -> Column:
+    """Extra non-NULL rows per key."""
+    return F.count(col) - F.count_distinct(F.col(col))
 
 
-def accepted_values(
-    df: DataFrame, col: str, values: Iterable, model: str = "", severity: str = "warn"
-) -> CheckResult:
-    bad = df.filter(F.col(col).isNotNull() & ~F.col(col).isin(list(values)))
+def _violations(name: str, predicate: Column, severity: str = "error") -> Check:
+    return Check(name, F.count_if(predicate), hi=0, severity=severity)
+
+
+def not_null(cols: Iterable[str], model: str = "") -> list[Check]:
+    return [_violations(f"not_null:{model}.{c}", F.col(c).isNull()) for c in cols]
+
+
+def unique(col: str, model: str = "") -> Check:
+    """dbt's unique (NULL keys ignored) as Soda's duplicate_count."""
+    return Check(f"unique:{model}.{col}", _duplicate_count(col), hi=0)
+
+
+def accepted_values(col: str, values: Iterable, model: str = "", severity: str = "warn") -> Check:
+    bad = F.col(col).isNotNull() & ~F.col(col).isin(list(values))
     return _violations(f"accepted_values:{model}.{col}", bad, severity)
+
+
+def accepted_range(col: str, min_value=None, max_value=None, model: str = "") -> Check:
+    pred: Column = F.lit(False)
+    if min_value is not None:
+        pred = pred | (F.col(col) < min_value)
+    if max_value is not None:
+        pred = pred | (F.col(col) > max_value)
+    return _violations(f"accepted_range:{model}.{col}", F.col(col).isNotNull() & pred)
+
+
+def positive_value(col: str, model: str = "") -> Check:
+    """Custom generic test (macros/test_positive_value.sql:11-17)."""
+    return _violations(f"positive_value:{model}.{col}", F.col(col) < 0)
+
+
+def singular(predicate: Column, name: str) -> Check:
+    """Singular test: no row may match the *violation* predicate
+    (e.g. assert_fare_not_exceeds_total.sql:5-11)."""
+    return _violations(f"singular:{name}", predicate)
+
+
+_METRICS = {
+    "row_count": lambda c: F.count(F.lit(1)),
+    "avg": F.avg,
+    "min": F.min,
+    "max": F.max,
+    "sum": F.sum,
+    "duplicate_count": _duplicate_count,
+}
+
+
+def metric(
+    kind: str, col: str | None = None, lo=None, hi=None, model: str = "", severity: str = "error"
+) -> Check:
+    """Soda-class table metric bound (reference
+    pipelines/11-observability-stack/soda/checks/silver_checks.yml:4-12,
+    gold_checks.yml:2-14): ``kind`` in {row_count, avg, min, max, sum,
+    duplicate_count} over ``col`` (None for row_count)."""
+    tgt = f"({col})" if col else ""
+    span = f"[{'-inf' if lo is None else lo},{'inf' if hi is None else hi}]"
+    return Check(f"metric:{model}.{kind}{tgt}∈{span}", _METRICS[kind](col), lo, hi, severity)
+
+
+def freshness(ts_col: str, now: str, warn_after_hours: int, model: str = "") -> Check:
+    """Source freshness: max(ts) must be recent (sources.yml:7-16)."""
+    oldest = datetime.datetime.fromisoformat(now) - datetime.timedelta(hours=warn_after_hours)
+    return Check(f"freshness:{model}.{ts_col}", F.max(ts_col), lo=oldest, severity="warn")
 
 
 def relationships(
@@ -59,29 +140,8 @@ def relationships(
     orphans = child.filter(F.col(col).isNotNull()).join(
         parent, child[col] == parent[parent_col], "left_anti"
     )
-    return _violations(f"relationships:{model}.{col}", orphans, severity)
-
-
-def accepted_range(
-    df: DataFrame, col: str, min_value=None, max_value=None, model: str = ""
-) -> CheckResult:
-    pred: Column = F.lit(False)
-    if min_value is not None:
-        pred = pred | (F.col(col) < min_value)
-    if max_value is not None:
-        pred = pred | (F.col(col) > max_value)
-    return _violations(f"accepted_range:{model}.{col}", df.filter(F.col(col).isNotNull() & pred))
-
-
-def positive_value(df: DataFrame, col: str, model: str = "") -> CheckResult:
-    """Custom generic test (macros/test_positive_value.sql:11-17)."""
-    return _violations(f"positive_value:{model}.{col}", df.filter(F.col(col) < 0))
-
-
-def singular(df: DataFrame, predicate: Column, name: str) -> CheckResult:
-    """Singular test: rows matching the *violation* predicate must be empty
-    (e.g. assert_fare_not_exceeds_total.sql:5-11)."""
-    return _violations(f"singular:{name}", df.filter(predicate))
+    name = f"relationships:{model}.{col}"
+    return evaluate(orphans, [Check(name, F.count(F.lit(1)), hi=0, severity=severity)])[0]
 
 
 def expect_schema(df: DataFrame, contract: T.StructType, model: str = "") -> CheckResult:
@@ -98,111 +158,10 @@ def expect_schema(df: DataFrame, contract: T.StructType, model: str = "") -> Che
     )
 
 
-def freshness(
-    df: DataFrame, ts_col: str, now: str, warn_after_hours: int, model: str = ""
-) -> CheckResult:
-    """Source freshness: max(ts) must be recent (sources.yml:7-16)."""
-    row = df.agg(F.max(ts_col).alias("m")).first()
-    ok = row["m"] is not None and (
-        row["m"] >= __import__("datetime").datetime.fromisoformat(now)
-        - __import__("datetime").timedelta(hours=warn_after_hours)
-    )
-    return CheckResult(name=f"freshness:{model}.{ts_col}", passed=bool(ok), severity="warn")
-
-
-# ---------------------------------------------------------------------------
-# Soda-class table-level metric bounds (reference
-# pipelines/11-observability-stack/soda/checks/silver_checks.yml:4-12,
-# gold_checks.yml:2-14: row_count > 5000, duplicate_count = 0,
-# avg(fare) between 5 and 30, min(fare) >= 0). Unlike the dbt-class
-# row-violation checks above, these assert on ONE aggregate of the
-# table; `metric_suite` fuses any number of them into a single
-# narrow aggregation pass — one scan however many bounds, which is the
-# form that survives 100 TB.
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class MetricBound:
-    """One Soda-style bound: metric in {row_count, avg, min, max, sum,
-    duplicate_count} over ``col`` (None for row_count), violated when
-    outside [min_value, max_value] (either side open)."""
-
-    metric: str
-    col: str | None = None
-    min_value: float | None = None
-    max_value: float | None = None
-    severity: str = "error"
-
-    def expr(self, idx: int) -> Column:
-        agg = {
-            "row_count": lambda: F.count(F.lit(1)),
-            "avg": lambda: F.avg(self.col),
-            "min": lambda: F.min(self.col),
-            "max": lambda: F.max(self.col),
-            "sum": lambda: F.sum(self.col),
-            "duplicate_count": lambda: (
-                F.count(self.col) - F.count_distinct(F.col(self.col))
-            ),
-        }[self.metric]()
-        return agg.cast("double").alias(f"_m{idx}")
-
-    @property
-    def name(self) -> str:
-        tgt = f"({self.col})" if self.col else ""
-        lo = "-inf" if self.min_value is None else self.min_value
-        hi = "inf" if self.max_value is None else self.max_value
-        return f"{self.metric}{tgt}∈[{lo},{hi}]"
-
-
-def metric_suite(df: DataFrame, bounds: list[MetricBound], model: str = "") -> list[CheckResult]:
-    """Evaluate every bound in ONE aggregation over one scan of ``df``."""
-    row = df.agg(*[b.expr(i) for i, b in enumerate(bounds)]).first()
-    out = []
-    for i, b in enumerate(bounds):
-        v = row[f"_m{i}"]
-        ok = v is not None
-        if ok and b.min_value is not None:
-            ok = v >= b.min_value
-        if ok and b.max_value is not None:
-            ok = v <= b.max_value
-        out.append(
-            CheckResult(
-                name=f"metric:{model}.{b.name}",
-                passed=bool(ok),
-                failing_rows=0 if ok else 1,
-                severity=b.severity,
-                detail=f"observed {v}",
-            )
-        )
-    return out
-
-
-def row_count_between(
-    df: DataFrame, min_rows: int, max_rows: int | None = None, model: str = ""
-) -> CheckResult:
-    return metric_suite(df, [MetricBound("row_count", None, min_rows, max_rows)], model)[0]
-
-
-def avg_between(df: DataFrame, col: str, lo: float, hi: float, model: str = "") -> CheckResult:
-    return metric_suite(df, [MetricBound("avg", col, lo, hi)], model)[0]
-
-
-def min_at_least(df: DataFrame, col: str, bound: float, model: str = "") -> CheckResult:
-    return metric_suite(df, [MetricBound("min", col, bound, None)], model)[0]
-
-
-def max_at_most(df: DataFrame, col: str, bound: float, model: str = "") -> CheckResult:
-    return metric_suite(df, [MetricBound("max", col, None, bound)], model)[0]
-
-
-def run_checks(results: Iterable[CheckResult | list[CheckResult]]) -> tuple[str, list[CheckResult]]:
-    """Flatten + account like a dbt build: 'PASS=n WARN=n ERROR=n TOTAL=n'."""
-    flat: list[CheckResult] = []
-    for r in results:
-        flat.extend(r if isinstance(r, list) else [r])
-    errors = [r for r in flat if not r.passed and r.severity == "error"]
-    warns = [r for r in flat if not r.passed and r.severity == "warn"]
-    passed = [r for r in flat if r.passed]
-    summary = f"PASS={len(passed)} WARN={len(warns)} ERROR={len(errors)} TOTAL={len(flat)}"
-    return summary, flat
+def run_checks(results: list[CheckResult]) -> tuple[str, list[CheckResult]]:
+    """Account like a dbt build: 'PASS=n WARN=n ERROR=n TOTAL=n'."""
+    errors = [r for r in results if not r.passed and r.severity == "error"]
+    warns = [r for r in results if not r.passed and r.severity == "warn"]
+    passed = [r for r in results if r.passed]
+    summary = f"PASS={len(passed)} WARN={len(warns)} ERROR={len(errors)} TOTAL={len(results)}"
+    return summary, results

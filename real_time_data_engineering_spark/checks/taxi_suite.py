@@ -26,79 +26,53 @@ def taxi_check_suite(
     """Run every check class over a built pipeline; returns the
     dbt-style ``PASS=n WARN=n ERROR=n TOTAL=n`` summary + results.
 
-    ``min_rows`` scales the Soda row_count floor to the corpus (the
-    reference's 5000 assumes its 10k-event generator).
+    Each table's checks run as one aggregation (``A.evaluate``), so the
+    suite is five Spark actions: four tables plus the relationships
+    anti-join. ``min_rows`` scales the Soda row_count floor to the
+    corpus (the reference's 5000 assumes its 10k-event generator).
     """
     stg, fct = built["stg_yellow_trips"], built["fct_trips"]
-    metrics = built["int_trip_metrics"]
-    dim = built["dim_locations"]
-    # Each check below is an independent tiny Spark action; running the
-    # 18 check thunks from a small thread pool overlaps their jobs
-    # (guide §2.6 — actions are only sequential because driver code
-    # calls them sequentially) instead of paying ~0.2 s of scheduling
-    # floor 18 times back-to-back. Every check runs UNCHANGED and the
-    # result list keeps the declaration order, so the summary line and
-    # per-check results are byte-identical to the sequential form.
-    # Measured on the bench's 10k-row e2e: 4.9 s → 1.8 s.
-    thunks: list = [
+    stg_checks = [
         # dbt generic tests (schema ymls)
-        lambda: A.not_null(stg, ["trip_id", "pickup_datetime", "dropoff_datetime", "pickup_date"], "stg"),
-        lambda: A.unique(stg, "trip_id", "stg"),
-        lambda: A.accepted_values(stg, "vendor_id", [1, 2, 6], "stg"),
-        lambda: A.accepted_values(stg, "rate_code_id", [1, 2, 3, 4, 5, 6, 99], "stg"),
-        lambda: A.accepted_values(stg, "payment_type_id", [0, 1, 2, 3, 4, 5, 6], "stg"),
-        lambda: A.relationships(fct, "pickup_location_id", dim, "location_id", "fct"),
-        lambda: A.accepted_range(metrics, "trip_duration_minutes", 1, 720, "int"),
-        lambda: A.accepted_range(metrics, "pickup_hour", 0, 23, "int"),
+        *A.not_null(["trip_id", "pickup_datetime", "dropoff_datetime", "pickup_date"], "stg"),
+        A.unique("trip_id", "stg"),
+        A.accepted_values("vendor_id", [1, 2, 6], "stg"),
+        A.accepted_values("rate_code_id", [1, 2, 3, 4, 5, 6, 99], "stg"),
+        A.accepted_values("payment_type_id", [0, 1, 2, 3, 4, 5, 6], "stg"),
         # custom generic (macros/test_positive_value.sql)
-        lambda: A.positive_value(stg, "fare_amount", "stg"),
-        lambda: A.positive_value(stg, "total_amount", "stg"),
+        A.positive_value("fare_amount", "stg"),
+        A.positive_value("total_amount", "stg"),
         # singular tests
-        lambda: A.singular(
-            stg,
+        A.singular(
             (F.col("fare_amount") > F.col("total_amount") + 0.01) & (F.col("total_amount") > 0),
             "fare_not_exceeds_total",
         ),
-        lambda: A.singular(
-            stg, F.col("dropoff_datetime") < F.col("pickup_datetime"), "trip_duration_positive"
-        ),
-        # model contract
-        lambda: A.expect_schema(stg, SILVER_TRIP, "stg_yellow_trips"),
-        # Soda-class table metric bounds — ONE fused aggregation per table
-        lambda: A.metric_suite(
-            stg,
-            [
-                A.MetricBound("row_count", None, min_rows, None),
-                A.MetricBound("duplicate_count", "trip_id", None, 0),
-                A.MetricBound("min", "fare_amount", 0, None),
-                A.MetricBound("avg", "fare_amount", 1, 100),
-                A.MetricBound("max", "passenger_count", None, 8, severity="warn"),
-            ],
-            "stg",
-        ),
-        lambda: A.metric_suite(
-            fct,
-            [
-                A.MetricBound("row_count", None, min_rows, None),
-                A.MetricBound("duplicate_count", "trip_id", None, 0),
-                A.MetricBound("min", "total_amount", 0, None),
-            ],
-            "fct",
-        ),
-        lambda: A.metric_suite(
-            built["mart_daily_revenue"],
-            [
-                A.MetricBound("row_count", None, 1, None),
-                A.MetricBound("min", "total_trips", 1, None),
-            ],
-            "mart_daily_revenue",
-        ),
+        A.singular(F.col("dropoff_datetime") < F.col("pickup_datetime"), "trip_duration_positive"),
+        # Soda-class table metric bounds
+        A.metric("row_count", None, min_rows, None, "stg"),
+        A.metric("duplicate_count", "trip_id", None, 0, "stg"),
+        A.metric("min", "fare_amount", 0, None, "stg"),
+        A.metric("avg", "fare_amount", 1, 100, "stg"),
+        A.metric("max", "passenger_count", None, 8, "stg", severity="warn"),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        # 600 s hang bound over the whole map (r10 verdict #1): the
-        # checks are independent sub-second actions, so tripping this
-        # can only mean a wedged action, not a slow one
-        results = list(pool.map(lambda t: t(), thunks, timeout=600))
-    return A.run_checks(results)
+    int_checks = [
+        A.accepted_range("trip_duration_minutes", 1, 720, "int"),
+        A.accepted_range("pickup_hour", 0, 23, "int"),
+    ]
+    fct_checks = [
+        A.metric("row_count", None, min_rows, None, "fct"),
+        A.metric("duplicate_count", "trip_id", None, 0, "fct"),
+        A.metric("min", "total_amount", 0, None, "fct"),
+    ]
+    mart_checks = [
+        A.metric("row_count", None, 1, None, "mart_daily_revenue"),
+        A.metric("min", "total_trips", 1, None, "mart_daily_revenue"),
+    ]
+    return A.run_checks([
+        *A.evaluate(stg, stg_checks),
+        A.expect_schema(stg, SILVER_TRIP, "stg_yellow_trips"),
+        *A.evaluate(built["int_trip_metrics"], int_checks),
+        *A.evaluate(fct, fct_checks),
+        A.relationships(fct, "pickup_location_id", built["dim_locations"], "location_id", "fct"),
+        *A.evaluate(built["mart_daily_revenue"], mart_checks),
+    ])

@@ -68,22 +68,12 @@ def marker_hits(c: Column | str, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("long")
 
 
-def word_ngrams(c: Column | str, n: int) -> Column:
-    """Distinct word n-gram shingles (the MinHash/Jaccard input).
-
-    PERFORMANCE TRAP: pass a *materialized* token-array column (an
-    attribute), not a raw text column. Expressions captured inside a
-    higher-order-function lambda are inlined and re-evaluated PER
-    ELEMENT — handing `split(lower(trim(text)))` straight in means the
-    tokenizer reruns for every gram position. `word_ngrams_tokens`
-    documents the fast calling convention; this wrapper exists for
-    small/fixture inputs.
-    """
-    return word_ngrams_tokens(tokens(c), n)
-
-
 def word_ngrams_tokens(toks: Column, n: int) -> Column:
-    """n-gram shingles over an already-tokenized array column."""
+    """n-gram shingles over an already-tokenized array column.
+
+    Pass a *materialized* token-array attribute, not an expression such
+    as ``tokens(text)``: an expression captured inside the higher-order
+    lambda is re-evaluated per gram position."""
     gram = F.transform(
         F.sequence(F.lit(0), F.size(toks) - n),
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),

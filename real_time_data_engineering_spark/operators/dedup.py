@@ -256,17 +256,6 @@ def minhash_signatures_wide(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def minhash_signatures(
-    df: DataFrame, n: int = 3, k: int = 16, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Long-form (doc_id, seed, sig) view of the wide signatures."""
-    wide = minhash_signatures_wide(df, n, k, text_col, id_col)
-    stack_args = ", ".join(f"{i}, sig_{i}" for i in range(k))
-    return wide.select(
-        F.col(id_col), F.expr(f"stack({k}, {stack_args}) AS (seed, sig)")
-    )
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     n: int = 3,

@@ -34,10 +34,6 @@ import uuid
 from pyspark.sql import SparkSession
 
 
-def _strip_scheme(uri: str) -> str:
-    return uri[7:] if uri.startswith("file://") else uri[5:] if uri.startswith("file:") else uri
-
-
 # The characters Hive/Spark escape in partition dir names
 # (Hive FileUtils.escapePathName / Spark ExternalCatalogUtils — verified
 # empirically on Spark 4.1.2: 'a=b/c%d e' renders as 'a%3Db%2Fc%25d e';

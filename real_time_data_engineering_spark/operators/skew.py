@@ -61,12 +61,6 @@ def salted_join(
     return out.drop("_salt")
 
 
-def top_frequency_keys(df: DataFrame, key: str, top_n: int = 10) -> DataFrame:
-    """Hot-key census: the skew diagnostic that decides whether to salt.
-    (count per key, descending; run on a sample at real scale.)"""
-    return df.groupBy(key).agg(F.count("*").alias("n")).orderBy(F.desc("n"), F.asc(key)).limit(top_n)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -99,11 +99,9 @@ class DagRunner:
             m = self.models[name]
             for d in m.deps:
                 if d in futures:
-                    # propagate dep failures too; the timeout is a
-                    # belt-and-suspenders hang bound (r10 verdict #1) —
-                    # FIFO + topo submission already guarantees progress,
-                    # so a wait this long can only mean a wedged action
-                    futures[d].result(timeout=600)
+                    # re-raises a failed dependency; FIFO + topo
+                    # submission guarantees the wait ends (see above)
+                    futures[d].result()
             t0 = time.perf_counter()
             df = m.fn(res.built)
             if m.materialization == "table" and self.warehouse_dir:
@@ -121,6 +119,6 @@ class DagRunner:
             for name in order:
                 futures[name] = pool.submit(build, name)
             for name in order:
-                futures[name].result(timeout=600)
+                futures[name].result()
         res.order = list(order)
         return res

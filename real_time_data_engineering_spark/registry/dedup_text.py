@@ -2184,15 +2184,6 @@ FROM est e LEFT JOIN truec t ON t.term = e.term
 """
 
 
-def _cm_bucket(col, i: int):
-    """u16 of md5('cm{i}:' || value) mod W — the shared
-    `operators.sketches.cm_bucket` kernel (d25/d33 md5-nibble idiom),
-    engine-identical by construction."""
-    from ..operators.sketches import cm_bucket
-
-    return cm_bucket(col, i, _CM_W)
-
-
 @register(
     "d41_countmin_freq",
     _D41_ORACLE,

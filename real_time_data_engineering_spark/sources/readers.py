@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import SEED_SCHEMAS, TABLE_NAMES
+from ..schemas import TABLE_NAMES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,12 +55,6 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """Register every corpus table as a temp view for the SQL API."""
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
-def load_seed_csv(spark: SparkSession, path: str, seed_name: str) -> DataFrame:
-    """CSV seed with typed columns (reference dbt seeds + ``+column_types``,
-    pipelines/00-batch-baseline/dbt_project/dbt_project.yml:24-39)."""
-    return spark.read.csv(path, header=True, schema=SEED_SCHEMAS[seed_name])
 
 
 def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:

@@ -305,22 +305,6 @@ def hourly_rollup_stream(
     )
 
 
-def run_to_memory(df: DataFrame, name: str) -> None:
-    """Drive a streaming frame to completion into an in-memory table
-    (test/bench harness; `complete` for aggregations)."""
-    mode = "complete" if df.isStreaming and _has_aggregate(df) else "append"
-    q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
-
-
-def _has_aggregate(df: DataFrame) -> bool:
-    try:
-        return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True
-
-
 # ---------------------------------------------------------------------------
 # Streaming point-in-time enrichment: as-of join inside foreachBatch.
 # Reference analogue: the feature-store serve path (pipelines/21-feast,
