@@ -735,6 +735,9 @@ def connected_components(
     edges = (
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("t"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("t")))
+        # a self-loop joins nothing: dropping it here makes a node seen
+        # only in (x, x) absent on both tiers, as star already does
+        .filter(F.col("s") != F.col("t"))
         .distinct()
         .localCheckpoint(eager=True)
     )

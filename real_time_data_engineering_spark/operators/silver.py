@@ -111,14 +111,11 @@ def rename_cast(raw: DataFrame) -> DataFrame:
     )
 
 
-def silver_transform(raw: DataFrame, deduplicate: bool = True) -> DataFrame:
+def silver_transform(raw: DataFrame) -> DataFrame:
     """The full Bronze→Silver pipeline: filter → dedup → project.
 
     At scale: the filter is pushed into the scan; dedup is the only
     shuffle (keyed on the natural key, AQE-skew-safe); the projection is
     narrow. Downstream writes partition by ``pickup_date``.
     """
-    cleaned = quality_filter(raw)
-    if deduplicate:
-        cleaned = dedup_latest(cleaned)
-    return rename_cast(cleaned)
+    return rename_cast(dedup_latest(quality_filter(raw)))

@@ -29,13 +29,12 @@ from ..sources.readers import ensure_min_partitions
 
 QUANT_SCALE = 1_000_000.0
 
-# Driver-combine bound for iterative round stats (kmeans/PQ training):
-# per-task partials are collected directly when their BYTE footprint
-# (partial rows × sum-vector width × 8 — each row carries a dim- or
-# sub_dim-length int64 array) is under this, else the distributed
-# pre-aggregation runs. Bytes, not rows (r10 verdict #8): a row bound
-# lets driver bytes scale with dim. 64 MiB ≡ the old 65,536-row bound
-# at dim 128. Module-level so tests can force either path and assert
+# Driver-fold bound for `_lloyd`'s round stats (k-means/PQ training):
+# the per-task partials (≤ n_parts·m·k rows, each a sub_dim-length
+# int64 sum) are collected directly when their BYTE footprint is under
+# this, else the distributed pre-aggregation runs. Bytes, not rows (a
+# row bound lets driver bytes scale with dim); 64 MiB ≡ 65,536 rows at
+# dim 128. Module-level so tests can force either fold and assert
 # bit-identical training output.
 DIRECT_STATS_BOUND = 64 * 1024 * 1024
 
@@ -674,6 +673,144 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k).select("qid", "nid", "cosine", "rank")
 
 
+def _lloyd(train: DataFrame, C, max_iter: int):
+    """Lloyd rounds over ``(m, k, sub_dim)`` codebooks ``C`` on the
+    ``(id, v)`` rows of ``train``: every row's subvector j joins its
+    nearest centroid in codebook j, then each centroid moves to the
+    mean of its members. k-means is the m = 1 case (Jégou et al.: PQ
+    with one subspace), so `kmeans_assign` and `pq_train_codes` train
+    through this one loop. Returns the trained codebooks.
+
+    Deterministic contract: assignment tie-break = lowest cluster (numpy
+    argmin's first minimum); empty clusters keep their centroid; updates
+    sum QUANTIZED int64 components (np.floor(v·1e6), the same IEEE
+    expression as `quantized()` — exact and order-independent, where
+    float64 partial sums would drift with partition order) and divide
+    once in float64; stop at the first round that moves nothing.
+
+    Scale shape: the codebooks ride to executors in the closure
+    (m·k·sub_dim doubles — tiny); each round is ONE Arrow-batched
+    mapInPandas scan that assigns AND emits per-(subspace, cluster)
+    partial sums, combined across all batches of a task, so per-round
+    state is O(m·k·sub_dim·partitions) — never the O(N) a re-join of
+    the assignment would cost. The driver runs at most ``max_iter``
+    rounds.
+    """
+    import numpy as np
+
+    def partial_fn(cents):
+        Cc = cents.copy()
+
+        def go(it):
+            import numpy as _np
+            import pandas as _pd
+
+            mm, _kk, ss = Cc.shape
+            # combine across ALL Arrow batches of the task before
+            # yielding: the partial relation is then ≤ m·k rows per TASK
+            # (not per 10k-row batch), which is what makes the one-stage
+            # driver fold below scale-safe to bound (guide §2.3,
+            # "aggregate before you shuffle" — here: before you collect)
+            acc_s: dict = {}
+            acc_n: dict = {}
+            for pdf in it:
+                if len(pdf) == 0:
+                    continue
+                X = _np.array(list(pdf["v"]), dtype=_np.float64)
+                for j in range(mm):
+                    Xj = X[:, j * ss : (j + 1) * ss]
+                    d2 = ((Xj[:, None, :] - Cc[j][None, :, :]) ** 2).sum(axis=2)
+                    cl = d2.argmin(axis=1)  # first-min → lowest cluster
+                    Qj = _np.floor(Xj * QUANT_SCALE).astype(_np.int64)
+                    uk, cnt = _np.unique(cl, return_counts=True)
+                    for idx, c in enumerate(uk):
+                        key = (j, int(c))
+                        acc_s[key] = acc_s.get(key, 0) + Qj[cl == c].sum(axis=0)
+                        acc_n[key] = acc_n.get(key, 0) + int(cnt[idx])
+            if acc_s:
+                keys = sorted(acc_s)
+                yield _pd.DataFrame(
+                    {
+                        "sub": _np.array([j for j, _ in keys], dtype="int32"),
+                        "cluster": _np.array([c for _, c in keys], dtype="int32"),
+                        "n": _np.array([acc_n[key] for key in keys], dtype="int64"),
+                        "s": [acc_s[key] for key in keys],
+                    }
+                )
+
+        return go
+
+    # One stage per round when the partials are driver-small (the
+    # coarse-quantizer / codebook regime: k ≤ ~1e4 even at 100 TB):
+    # collect and fold in numpy instead of map + posexplode/groupBy
+    # exchange + reduce (guide §2.4). Integer sums are order-independent,
+    # so both folds are bit-identical.
+    m, k, sub_dim = C.shape
+    n_parts = train.rdd.getNumPartitions()
+    direct = n_parts * m * k * sub_dim * 8 <= DIRECT_STATS_BOUND
+    for _ in range(max_iter):
+        partials = train.mapInPandas(
+            partial_fn(C), "sub int, cluster int, n bigint, s array<bigint>"
+        )
+        acc: dict = {}
+        cnt: dict = {}
+        if direct:
+            for r in partials.collect():
+                key = (r.sub, r.cluster)
+                acc[key] = acc.get(key, 0) + np.asarray(r.s, dtype=np.int64)
+                cnt[key] = cnt.get(key, 0) + r.n
+        else:
+            # m·k·sub_dim tiny rows after one narrow agg; each pos row
+            # carries the (sub, cluster)'s total n (constant across pos)
+            stats = (
+                partials.select("sub", "cluster", "n", F.posexplode("s").alias("pos", "sv"))
+                .groupBy("sub", "cluster", "pos")
+                .agg(F.sum("sv").alias("s"), F.sum("n").alias("n"))
+                .collect()
+            )
+            for r in stats:
+                key = (r.sub, r.cluster)
+                acc.setdefault(key, np.zeros(sub_dim, dtype=np.int64))[r.pos] = r.s
+                cnt[key] = r.n
+        new_C = C.copy()
+        for (j, c), s in acc.items():
+            new_C[j, c] = s.astype(np.float64) / (QUANT_SCALE * cnt[(j, c)])
+        if np.array_equal(new_C, C):
+            break
+        C = new_C
+    return C
+
+
+def _assign(narrow: DataFrame, C) -> DataFrame:
+    """Nearest centroid of every ``(id, v)`` row against the ``(k, dim)``
+    centroids ``C`` → (id, cluster, dist_sq): float64 squared-L2, numpy
+    argmin's first minimum = lowest-cluster tie-break, centroids riding
+    in the closure. One Arrow-batched narrow pass, no shuffle; the
+    kernel is closure-contained (driver-parity rule)."""
+
+    def assign_fn(cents):
+        Cc = cents.copy()
+
+        def go(it):
+            import numpy as _np
+            import pandas as _pd
+
+            for pdf in it:
+                if len(pdf) == 0:
+                    continue
+                M = _np.array(list(pdf["v"]), dtype=_np.float64)
+                d2 = ((M[:, None, :] - Cc[None, :, :]) ** 2).sum(axis=2)
+                cl = d2.argmin(axis=1)  # first-min → lowest-cluster tie-break
+                yield _pd.DataFrame(
+                    {"id": pdf["id"].to_numpy(), "cluster": cl.astype("int32"),
+                     "dist_sq": d2[_np.arange(len(M)), cl]}
+                )
+
+        return go
+
+    return narrow.mapInPandas(assign_fn(C), "id bigint, cluster int, dist_sq double")
+
+
 def kmeans_assign(
     emb: DataFrame,
     k: int = 8,
@@ -689,21 +826,10 @@ def kmeans_assign(
     domain discovery / IVF coarse quantizers.
 
     Deterministic contract (reproducible across runs, partitionings and
-    engines): init = the k vectors with smallest ids; assignment
-    tie-break = lowest cluster index; empty clusters keep their previous
-    centroid; centroid updates sum QUANTIZED int64 components (exact,
-    order-independent — float64 partial sums would drift with partition
-    order) and divide once in float64.
-
-    Scale shape: centroids ride to executors in the closure (k·dim
-    doubles — tiny); each round is ONE Arrow-batched mapInPandas scan
-    that assigns AND emits per-cluster partial sums (map-side combine
-    in the kernel), so per-round shuffle state is O(k·dim·partitions)
-    — never the O(N) a re-join of the assignment would cost. The
-    kernel quantizes in-place (np.floor(v·1e6) is the same IEEE
-    expression as `quantized()`), so the update stays exact-int and
-    bit-reproducible under any partitioning. Rounds are driver-bounded
-    like d15's label propagation.
+    engines): init = the k vectors with smallest ids; the rounds are
+    `_lloyd` with one subspace (its tie-break, empty-cluster and exact
+    int64 update rules apply); the final pass assigns every vector to
+    its nearest trained centroid.
 
     ``sample_n``: the 100 TB knob. Lloyd rounds over the full corpus
     cost max_iter full scans; a coarse quantizer does not need them —
@@ -737,127 +863,13 @@ def kmeans_assign(
     # corpus-scaled cache instead of leaking it for the session's life
     # (bench runs s4/s5/s6 back to back in one JVM).
     # training set: full corpus, or the sample_n smallest ids (see
-    # docstring) — the Lloyd loop below only ever touches `train`
+    # docstring) — the Lloyd rounds only ever touch `train`
     train = narrow if sample_n is None else narrow.orderBy("id").limit(sample_n)
     train = train.persist(StorageLevel.MEMORY_AND_DISK)
     first = train.orderBy("id").limit(k).collect()
-    centroids = np.array([r.v for r in first], dtype=np.float64)
-    dim = centroids.shape[1]
-
-    out_schema = "id bigint, cluster int, dist_sq double"
-
-    def assign_fn(cents):
-        C = cents.copy()
-
-        def go(it):
-            import numpy as _np
-            import pandas as _pd
-
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                M = _np.array(list(pdf["v"]), dtype=_np.float64)
-                d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                cl = d2.argmin(axis=1)  # argmin returns FIRST min → lowest index tie-break
-                yield _pd.DataFrame(
-                    {"id": pdf["id"].to_numpy(), "cluster": cl.astype("int32"),
-                     "dist_sq": d2[_np.arange(len(M)), cl]}
-                )
-
-        return go
-
-    def partial_fn(cents):
-        C = cents.copy()
-
-        def go(it):
-            import numpy as _np
-            import pandas as _pd
-
-            # combine across ALL Arrow batches of the task before
-            # yielding: the partial relation is then ≤ k rows per TASK
-            # (not per 10k-row batch), which is what makes the one-stage
-            # driver combine below scale-safe to bound (guide §2.3,
-            # "aggregate before you shuffle" — here: before you collect)
-            acc_s: dict = {}
-            acc_n: dict = {}
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                M = _np.array(list(pdf["v"]), dtype=_np.float64)
-                d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                cl = d2.argmin(axis=1)
-                Q = _np.floor(M * QUANT_SCALE).astype(_np.int64)
-                ks, counts = _np.unique(cl, return_counts=True)
-                for i, kk in enumerate(ks):
-                    s = Q[cl == kk].sum(axis=0)
-                    kk = int(kk)
-                    if kk in acc_s:
-                        acc_s[kk] += s
-                        acc_n[kk] += int(counts[i])
-                    else:
-                        acc_s[kk] = s
-                        acc_n[kk] = int(counts[i])
-            if acc_s:
-                ks_sorted = sorted(acc_s)
-                yield _pd.DataFrame(
-                    {
-                        "cluster": _np.array(ks_sorted, dtype="int32"),
-                        "n": _np.array([acc_n[kk] for kk in ks_sorted], dtype="int64"),
-                        "s": [acc_s[kk] for kk in ks_sorted],
-                    }
-                )
-
-        return go
-
-    # Round-stats plumbing (guide §2.4 — remove the exchange outright):
-    # the per-task partials are ≤ n_parts·k rows of k·dim int64 sums.
-    # When that is driver-small (the coarse-quantizer regime: k ≤ ~1e4
-    # even at 100 TB), collect them directly and fold in numpy — ONE
-    # stage per Lloyd round instead of map + posexplode/groupBy exchange
-    # + reduce. Integer sums are order-independent, so the fold is
-    # bit-identical to the distributed pre-aggregation it replaces.
-    # Past the bound (huge k · many partitions) the distributed
-    # pre-aggregation path below is unchanged.
-    n_parts = train.rdd.getNumPartitions()
-    direct = n_parts * k * dim * 8 <= DIRECT_STATS_BOUND
-    for _ in range(max_iter):
-        partials = train.mapInPandas(
-            partial_fn(centroids), "cluster int, n bigint, s array<bigint>"
-        )
-        new_c = centroids.copy()
-        if direct:
-            agg_s = {}
-            agg_n = {}
-            for r in partials.collect():
-                arr = np.asarray(r.s, dtype=np.int64)
-                if r.cluster in agg_s:
-                    agg_s[r.cluster] += arr
-                    agg_n[r.cluster] += r.n
-                else:
-                    agg_s[r.cluster] = arr
-                    agg_n[r.cluster] = r.n
-            for cl, sums in agg_s.items():
-                new_c[cl] = sums.astype(np.float64) / (QUANT_SCALE * agg_n[cl])
-        else:
-            # k·dim tiny rows after one narrow agg; each pos row carries
-            # the cluster's total n (sum of task ns, constant across pos)
-            stats = (
-                partials.select("cluster", "n", F.posexplode("s").alias("pos", "sv"))
-                .groupBy("cluster", "pos")
-                .agg(F.sum("sv").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            agg_s = {}
-            agg_n = {}
-            for r in stats:
-                agg_s.setdefault(r.cluster, np.zeros(dim, dtype=np.float64))[r.pos] = float(r.s)
-                agg_n[r.cluster] = r.n
-            for cl, sums in agg_s.items():
-                new_c[cl] = sums / (QUANT_SCALE * agg_n[cl])
-        if np.array_equal(new_c, centroids):
-            break
-        centroids = new_c
-    final = narrow.mapInPandas(assign_fn(centroids), out_schema).select(
+    C0 = np.array([r.v for r in first], dtype=np.float64)
+    centroids = _lloyd(train, C0[None], max_iter)[0]
+    final = _assign(narrow, centroids).select(
         F.col("id").alias(id_col), "cluster", "dist_sq"
     )
     train.unpersist(blocking=False)
@@ -871,42 +883,18 @@ def assign_with_centroids(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Assign every vector to its nearest FROZEN centroid — the
-    serve-time half of `kmeans_assign`, factored out so every consumer
-    of a trained coarse quantizer (IVF-PQ index appends/forgets, the
-    frozen-centroid SemDeDup twin) routes through the IDENTICAL kernel:
-    float64 squared-L2, numpy argmin's first-minimum = lowest-cluster
-    tie-break, centroids riding in the closure (k·dim doubles — tiny).
-    One Arrow-batched narrow pass, no shuffle. ``centroids`` is a
-    (k, dim) float64 ndarray (e.g. `kmeans_assign(with_centroids=True)`
-    output, or a persisted index's ``_quantizer`` table). Returns
-    (id_col, cluster)."""
-
-    def assign_fn(cents_arr):
-        Cc = cents_arr.copy()
-
-        def go(it):
-            import numpy as _np
-            import pandas as _pd
-
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                M = _np.array(list(pdf["v"]), dtype=_np.float64)
-                d2 = ((M[:, None, :] - Cc[None, :, :]) ** 2).sum(axis=2)
-                cl = d2.argmin(axis=1)  # first-min → lowest-cluster tie-break
-                yield _pd.DataFrame(
-                    {"id": pdf["id"].to_numpy(), "cluster": cl.astype("int32")}
-                )
-
-        return go
-
+    serve-time half of `kmeans_assign`, through the SAME `_assign`
+    kernel, so every consumer of a trained coarse quantizer (IVF-PQ
+    index appends/forgets, the frozen-centroid SemDeDup twin) routes
+    identically. ``centroids`` is a (k, dim) float64 ndarray (e.g.
+    `kmeans_assign(with_centroids=True)` output, or a persisted index's
+    ``_quantizer`` table). Returns (id_col, cluster)."""
     import numpy as np
 
-    cents = np.asarray(centroids, dtype=np.float64)
     narrow = emb.select(
         F.col(id_col).alias("id"), F.col(emb_col).cast("array<double>").alias("v")
     )
-    return narrow.mapInPandas(assign_fn(cents), "id bigint, cluster int").select(
+    return _assign(narrow, np.asarray(centroids, dtype=np.float64)).select(
         F.col("id").alias(id_col), "cluster"
     )
 
@@ -928,14 +916,8 @@ def pq_train_codes(
     vectors cannot).
 
     Deterministic contract (same as `kmeans_assign`, per subspace):
-    init = the k smallest-id vectors' subvectors; assignment tie-break
-    = lowest cluster; empty clusters keep their centroid; updates sum
-    QUANTIZED int64 components and divide once in float64.
-
-    Scale shape: ONE Arrow-batched pass per Lloyd round trains ALL m
-    subspaces simultaneously (per-round shuffle state is
-    O(m·k·sub_dim·partitions), never O(N)); codebooks ride in the
-    closure (m·k·sub_dim doubles — tiny); rounds are driver-bounded.
+    init = the k smallest-id vectors' subvectors; the rounds are
+    `_lloyd`, which trains ALL m subspaces in one pass per round.
 
     Returns (codes DataFrame (id_col, sub, code), codebooks ndarray
     of shape (m, k, sub_dim)).
@@ -957,97 +939,8 @@ def pq_train_codes(
         raise ValueError(f"m={m} must divide dim={dim}")
     sub_dim = dim // m
     # C[j][c] = subvector j of the c-th smallest-id vector
-    C = full.reshape(k, m, sub_dim).transpose(1, 0, 2).copy()
-
-    def partial_fn(cents):
-        Cc = cents.copy()
-
-        def go(it):
-            import numpy as _np
-            import pandas as _pd
-
-            mm, _kk, ss = Cc.shape
-            # combine across ALL Arrow batches before yielding — ≤ m·k
-            # rows per TASK (see kmeans_assign: makes the one-stage
-            # driver combine boundable, and shrinks the distributed
-            # pre-agg's input at any scale)
-            acc_s: dict = {}
-            acc_n: dict = {}
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                X = _np.array(list(pdf["v"]), dtype=_np.float64)
-                for j in range(mm):
-                    Xj = X[:, j * ss : (j + 1) * ss]
-                    d2 = ((Xj[:, None, :] - Cc[j][None, :, :]) ** 2).sum(axis=2)
-                    cl = d2.argmin(axis=1)  # first-min → lowest cluster
-                    Qj = _np.floor(Xj * QUANT_SCALE).astype(_np.int64)
-                    uk, cnt = _np.unique(cl, return_counts=True)
-                    for idx, c in enumerate(uk):
-                        key = (j, int(c))
-                        s = Qj[cl == c].sum(axis=0)
-                        if key in acc_s:
-                            acc_s[key] += s
-                            acc_n[key] += int(cnt[idx])
-                        else:
-                            acc_s[key] = s
-                            acc_n[key] = int(cnt[idx])
-            if acc_s:
-                keys = sorted(acc_s)
-                yield _pd.DataFrame(
-                    {
-                        "sub": _np.array([j for j, _ in keys], dtype="int32"),
-                        "cluster": _np.array([c for _, c in keys], dtype="int32"),
-                        "n": _np.array([acc_n[key] for key in keys], dtype="int64"),
-                        "s": [acc_s[key] for key in keys],
-                    }
-                )
-
-        return go
-
-    # One-stage round stats when the per-task partials are driver-small
-    # (m·k per task; see kmeans_assign for the rationale + parity
-    # argument). The distributed pre-aggregation remains for huge
-    # codebooks · many partitions.
-    n_parts = narrow.rdd.getNumPartitions()
-    direct = n_parts * m * k * sub_dim * 8 <= DIRECT_STATS_BOUND
-    for _ in range(max_iter):
-        partials = narrow.mapInPandas(
-            partial_fn(C), "sub int, cluster int, n bigint, s array<bigint>"
-        )
-        new_C = C.copy()
-        if direct:
-            acc: dict = {}
-            cnt: dict = {}
-            for r in partials.collect():
-                key = (r.sub, r.cluster)
-                arr = np.asarray(r.s, dtype=np.int64)
-                if key in acc:
-                    acc[key] += arr
-                    cnt[key] += r.n
-                else:
-                    acc[key] = arr
-                    cnt[key] = r.n
-            for (j, c), s_arr in acc.items():
-                new_C[j, c] = s_arr.astype(np.float64) / (QUANT_SCALE * cnt[(j, c)])
-        else:
-            stats = (
-                partials.select("sub", "cluster", "n", F.posexplode("s").alias("pos", "sv"))
-                .groupBy("sub", "cluster", "pos")
-                .agg(F.sum("sv").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            acc = {}
-            cnt = {}
-            for r in stats:
-                acc.setdefault((r.sub, r.cluster), np.zeros(sub_dim, dtype=np.float64))[r.pos] = float(r.s)
-                cnt[(r.sub, r.cluster)] = r.n
-            for (j, c), s_arr in acc.items():
-                new_C[j, c] = s_arr / (QUANT_SCALE * cnt[(j, c)])
-        if np.array_equal(new_C, C):
-            break
-        C = new_C
-
+    C0 = full.reshape(k, m, sub_dim).transpose(1, 0, 2).copy()
+    C = _lloyd(narrow, C0, max_iter)
     codes = pq_encode(narrow, C, id_col="id", emb_col="v").select(
         F.col("id").alias(id_col), "sub", "code"
     )

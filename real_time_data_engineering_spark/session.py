@@ -45,6 +45,14 @@ _SCALE_INVARIANT = {
 }
 
 
+def _driver_mem() -> str:
+    """Local driver heap: a third of physical RAM, 2–48 GiB. In local
+    mode the driver JVM also runs every task, and a fixed large heap
+    lets it grow past a small machine's RAM until the kernel kills it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(2, ram // 3 // 1024**3))}g"
+
+
 def get_spark(
     app_name: str = "real_time_data_engineering_spark",
     master: str | None = None,
@@ -71,7 +79,7 @@ def get_spark(
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if master.startswith("local"):
         builder = (
-            builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+            builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_mem()))
             .config("spark.ui.enabled", "false")
             .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         )

@@ -243,10 +243,10 @@ def run_bronze_to_silver(
     (unlike the reference's 8 copies). Checkpointing + deterministic
     batch ids give effectively-once file commits.
     """
-    bronze, dead = parse_bronze(source)
+    _, dead = parse_bronze(source)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        b, d = parse_bronze(batch_df) if "value" in batch_df.columns else (batch_df, None)
+        b, _ = parse_bronze(batch_df)
         b.persist()
         b.write.mode("append").parquet(bronze_path)
         silver = silver_transform(b)

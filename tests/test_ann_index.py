@@ -447,3 +447,31 @@ def test_append_invalidates_idempotency_stamp(spark, tmp_path):
         for r in ivfpq_index_topk(spark, path, queries, topk=50, n_probe=4).collect()
     }
     assert nids and all(n < 50 for n in nids)
+
+
+def test_ivfpq_refine_raises_on_corpus_missing_shortlist_vector(spark, tmp_path):
+    """Probing an index with a corpus that lacks a shortlisted vector
+    (appended index + stale base corpus) must FAIL, not silently return
+    fewer than topk rows."""
+    from py4j.protocol import Py4JJavaError
+
+    from real_time_data_engineering_spark.operators.ann_index import (
+        ivfpq_index_topk_refined,
+        write_ivfpq_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "ivfpq")
+    write_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=4)
+    queries = emb.filter(F.col("vec_id") < 3)
+    # drop most of the corpus: shortlist candidates can't all resolve
+    stale = emb.filter(F.col("vec_id") < 5)
+    with pytest.raises((Py4JJavaError, Exception), match="no raw vector"):
+        ivfpq_index_topk_refined(
+            spark, path, queries, stale, topk=5, refine_factor=5, n_probe=2
+        ).collect()
+    # the full corpus still works
+    ok = ivfpq_index_topk_refined(
+        spark, path, queries, emb, topk=5, refine_factor=5, n_probe=2
+    )
+    assert ok.count() > 0

@@ -189,6 +189,73 @@ def test_connected_components_matches_union_find(spark):
     assert got == want
 
 
+def _cc_rows(df):
+    return {(r.node, r.cluster_id, r.cluster_size) for r in df.collect()}
+
+
+# connected_components has two tiers gated by the measured edge-set
+# byte size: a bounded driver union-find under ``DIRECT_EDGE_BOUND`` and
+# the large-star/small-star variant past it. Both must produce IDENTICAL
+# output — component membership is join-order independent and
+# min-of-component is deterministic, so this is an exactness contract.
+# These tests force each tier via the module constant and assert
+# equality, including a string-id case (UTF-8 binary order must match
+# Python's code-point min) and self-loops.
+
+
+def test_cc_driver_and_distributed_paths_identical(spark, monkeypatch):
+    """(5, 5) and (3, 3) are self-loops: a node seen only in one is a
+    singleton, and singletons are not rows — on both tiers."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8), (10, 11), (11, 12), (12, 10), (3, 1), (5, 5), (3, 3)],
+        "d1 bigint, d2 bigint",
+    )
+    monkeypatch.setattr(D, "DIRECT_EDGE_BOUND", 1 << 30)
+    direct = _cc_rows(D.connected_components(pairs))
+    monkeypatch.setattr(D, "DIRECT_EDGE_BOUND", -1)
+    dist = _cc_rows(D.connected_components(pairs))
+    assert direct == dist == _cc_rows(D.connected_components_star(pairs))
+    assert direct == {
+        (1, 1, 3), (2, 1, 3), (3, 1, 3),
+        (7, 7, 2), (8, 7, 2),
+        (10, 10, 3), (11, 10, 3), (12, 10, 3),
+    }
+
+
+def test_cc_driver_path_string_ids_match_star_variant(spark, monkeypatch):
+    """String ids: Python's min (code points) must order like Spark's
+    MIN (UTF-8 binary). The distributed reference here is
+    `connected_components_star`, whose count+xxhash64 fingerprint probe
+    is type-agnostic."""
+    pairs = spark.createDataFrame(
+        [("docB", "docA"), ("docC", "docB"), ("x1", "x2")],
+        "d1 string, d2 string",
+    )
+    monkeypatch.setattr(D, "DIRECT_EDGE_BOUND", 1 << 30)
+    direct = _cc_rows(D.connected_components(pairs))
+    star = _cc_rows(D.connected_components_star(pairs))
+    assert direct == star
+    assert ("docA", "docA", 3) in direct
+
+
+def test_cc_driver_path_schema_matches_distributed(spark, monkeypatch):
+    pairs = spark.createDataFrame([(1, 2)], "d1 bigint, d2 bigint")
+    monkeypatch.setattr(D, "DIRECT_EDGE_BOUND", 1 << 30)
+    direct = D.connected_components(pairs)
+    monkeypatch.setattr(D, "DIRECT_EDGE_BOUND", -1)
+    dist = D.connected_components(pairs)
+    assert [(f.name, f.dataType) for f in direct.schema.fields] == [
+        (f.name, f.dataType) for f in dist.schema.fields
+    ]
+
+
+def test_d15_oracle_green_through_driver_tier(spark, differ):
+    """d15's registered lineage (default bound → driver tier at test
+    scale) must still reconcile with the DuckDB oracle end-to-end."""
+    res = differ.run("d15_dup_clusters")
+    assert res.ok, res.mismatches
+
+
 def test_kmeans_invariants(spark, embeddings):
     """Every point lands on its nearest centroid among those actually
     used for the final assignment, ≤ k clusters, and the run is
@@ -696,3 +763,54 @@ def test_mmr_diversifies_against_relevance_only_top5(spark):
         return sum(vals) / len(vals)
 
     assert mean_paircos(mmr) <= mean_paircos(top5) + 1e-12
+
+
+# The Lloyd trainers (k-means, PQ codebooks) fold their per-task round
+# stats on the driver when the partials are provably driver-small, and
+# pre-aggregate them distributed past ``DIRECT_STATS_BOUND``. Both folds
+# must produce BIT-IDENTICAL training output — integer sums are
+# order-independent, so this is an exactness contract, not a tolerance.
+# These tests force each fold via the module constant, so an edit that
+# breaks the parity (e.g. a float fold) fails loudly.
+#
+# NOTE: a matching direct-collect rewrite of the quality-probe GD
+# rounds was tried and REVERTED: the probe's per-round aggregation was
+# already pure-JVM codegen (decimal sums with map-side partials), and
+# moving it onto the Python/Arrow boundary tripled d47/d48/d50 wall
+# time (2.5 s → 8.4 s at sf0.1) — guide §4.1's boundary cost in the
+# wrong direction. See OPTIMIZATION_r10.md. The k-means/PQ cases differ
+# because their per-round pass was ALREADY a mapInPandas kernel; the
+# direct fold there only removed the posexplode/groupBy exchange.
+
+
+def test_kmeans_direct_and_distributed_round_stats_bit_identical(
+    spark, embeddings, monkeypatch
+):
+    import numpy as np
+
+    # force >1 partition so the per-task combine actually combines
+    emb = embeddings.repartition(5)
+    monkeypatch.setattr(S, "DIRECT_STATS_BOUND", 1_000_000)
+    out_d, cents_d = S.kmeans_assign(emb, k=4, max_iter=5, with_centroids=True)
+    rows_d = {(r.vec_id, r.cluster, r.dist_sq) for r in out_d.collect()}
+    monkeypatch.setattr(S, "DIRECT_STATS_BOUND", 0)
+    out_x, cents_x = S.kmeans_assign(emb, k=4, max_iter=5, with_centroids=True)
+    rows_x = {(r.vec_id, r.cluster, r.dist_sq) for r in out_x.collect()}
+    assert np.array_equal(cents_d, cents_x)  # bit-identical centroids
+    assert rows_d == rows_x
+
+
+def test_pq_direct_and_distributed_round_stats_bit_identical(
+    spark, embeddings, monkeypatch
+):
+    import numpy as np
+
+    emb = embeddings.repartition(5)
+    monkeypatch.setattr(S, "DIRECT_STATS_BOUND", 1_000_000)
+    codes_d, books_d = S.pq_train_codes(emb, m=8, k=8, max_iter=4)
+    rows_d = {(r.vec_id, r.sub, r.code) for r in codes_d.collect()}
+    monkeypatch.setattr(S, "DIRECT_STATS_BOUND", 0)
+    codes_x, books_x = S.pq_train_codes(emb, m=8, k=8, max_iter=4)
+    rows_x = {(r.vec_id, r.sub, r.code) for r in codes_x.collect()}
+    assert np.array_equal(books_d, books_x)  # bit-identical codebooks
+    assert rows_d == rows_x

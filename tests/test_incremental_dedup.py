@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from real_time_data_engineering_spark.operators import freshness
 from real_time_data_engineering_spark.operators.dedup import (
     _FP_TABLE,
     append_fingerprint_registry,
@@ -235,3 +236,23 @@ def test_minhash_index_skip_if_current_reuses_then_rebuilds(spark, documents, tm
     assert not os.path.isdir(os.path.join(path, "_meta"))
     write_minhash_index(old, path, n_files=4, skip_if_current=True)
     assert os.path.isdir(os.path.join(path, "_meta"))
+
+
+def test_build_stamp_format_version_forces_rebuild(spark, tmp_path, monkeypatch):
+    """A stamp written by old code must stop matching after the index
+    format version is bumped, even when (corpus, params) are unchanged
+    — otherwise skip_if_current silently serves a stale-layout index."""
+    df = spark.range(10).select(F.col("id").alias("doc_id"))
+    path = str(tmp_path / "idx")
+    stamp = freshness.BuildStamp(spark, path, {"k": 3}, df, ("doc_id",))
+    stamp.write()
+    assert stamp.is_current()
+    # same (corpus, params) from a fresh instance still matches...
+    again = freshness.BuildStamp(spark, path, {"k": 3}, df, ("doc_id",))
+    assert again.is_current()
+    # ...but a format bump (a code upgrade) must invalidate it
+    monkeypatch.setattr(
+        freshness, "INDEX_FORMAT_VERSION", freshness.INDEX_FORMAT_VERSION + 1
+    )
+    upgraded = freshness.BuildStamp(spark, path, {"k": 3}, df, ("doc_id",))
+    assert not upgraded.is_current()

@@ -432,3 +432,39 @@ def test_probe_streaming_scoring_equals_batch(spark, tmp_path):
         for r in score_with_probe(spark.read.parquet(src), w).collect()
     }
     assert got == want and len(got) == 100
+
+
+def test_d49_zero_token_source_yields_finite_epochs(spark, tmp_path):
+    """An all-whitespace source has source_tokens=0; both engines must
+    agree on the clamped (div by greatest(tokens,1)) repeat factor
+    instead of NULL-vs-raise divergence."""
+    import duckdb
+
+    from real_time_data_engineering_spark.registry import all_specs
+    from real_time_data_engineering_spark.sources.readers import load_table
+
+    from conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents").limit(20)
+    empty = docs.limit(3).withColumn("text", F.lit("   ")).withColumn(
+        "source", F.lit("empty_src")
+    )
+    sf_dir = str(tmp_path)
+    docs.unionByName(empty).write.parquet(f"{sf_dir}/documents.parquet")
+
+    spec = all_specs()["d49_epoch_budget"]
+    got = {
+        (r.source, r.n_docs, r.source_tokens, r.budget_tokens, r.epochs_x100, r.over_repeat)
+        for r in spec.spark(spark, sf_dir).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet/*.parquet')"
+    )
+    want = {tuple(r) for r in con.execute(spec.oracle).fetchall()}
+    assert got == want
+    by_src = {t[0]: t for t in got}
+    assert by_src["empty_src"][2] == 0  # zero tokens...
+    assert by_src["empty_src"][4] is not None  # ...finite epochs_x100
+    assert by_src["empty_src"][5] is True  # and flagged over the knee

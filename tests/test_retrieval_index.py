@@ -191,3 +191,64 @@ def test_lexical_index_skip_if_current_reuses_then_rebuilds(spark, documents, tm
         for r in lexical_index_bm25(spark, path, q).collect()
     }
     assert back == want
+
+
+def test_bm25_single_pass_equals_two_pass_formulation(spark):
+    """Lexical-chain single pass: `corpus_stats` computes dl as
+    size(token array) — a narrow projection, no explode+groupBy
+    exchange, no separate docs.count() scan — and `bm25_scores`
+    derives tf AND df from ONE (term, doc_id)-keyed aggregation over a
+    single tokenize pass. Both must be BIT-IDENTICAL to the earlier
+    two-pass formulation, spelled literally below (a token-less doc is
+    unioned in so the n_docs-vs-avgdl-denominator split is exercised
+    too)."""
+    from real_time_data_engineering_spark.operators.retrieval import _bm25_from_parts
+
+    base = load_table(spark, SF_DIR, "documents")
+    extra = spark.createDataFrame(
+        [(900_000_001, "12345 --- !!!", "xx", "synthetic", 13)],
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    )
+    docs = base.select("doc_id", "text", "lang", "source", "n_chars").unionByName(
+        extra
+    )
+    tok = tokens_df(docs)
+    n_docs, avgdl, dl = corpus_stats(docs, tok)
+
+    # the old dl/n_docs/avgdl formulation, spelled out
+    old_dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    assert {(r.doc_id, r.dl) for r in dl.collect()} == {
+        (r.doc_id, r.dl) for r in old_dl.collect()
+    }
+    assert n_docs == float(docs.count())
+    row = old_dl.agg(F.sum("dl").alias("s"), F.count("*").alias("c")).first()
+    assert avgdl == float(row["s"]) / float(row["c"])
+
+    qterms = (
+        tok.filter(F.col("doc_id") < 5)
+        .select(F.col("doc_id").alias("query_id"), "term")
+        .distinct()
+    )
+    got = bm25_scores(tok, qterms, n_docs, avgdl, dl, exclude_self=True)
+
+    # the old two-pass tf/df formulation, spelled out
+    tf = (
+        tok.join(F.broadcast(qterms), "term")
+        .filter(F.col("doc_id") != F.col("query_id"))
+        .groupBy("query_id", "term", "doc_id")
+        .agg(F.count("*").alias("tf"))
+    )
+    dfq = (
+        tok.join(F.broadcast(qterms.select("term").distinct()), "term")
+        .groupBy("term")
+        .agg(F.countDistinct("doc_id").alias("df"))
+    )
+    want = _bm25_from_parts(tf, dfq, dl, n_docs, avgdl, 1.2, 0.75)
+
+    def key(df):
+        return {
+            (r.query_id, r.doc_id, str(r.score_x), r.n_terms_matched)
+            for r in df.collect()
+        }
+
+    assert key(got) == key(want) and key(got)
