@@ -67,18 +67,61 @@ def dedup_keep_first(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 def shingle_exploded(df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle) pairs — the input relation for Jaccard/MinHash.
+    """(doc_id, shingle) pairs — the input relation for Jaccard/MinHash."""
+    return _shingles(df, n, text_col, id_col)
 
-    Tokenization is materialized as its own projection so the n-gram
-    lambda sees an attribute (cheap per-element read), not an inlined
-    split() re-run per gram — Catalyst's CollapseProject keeps the
-    boundary because the token array is referenced more than once and
-    isn't cheap to duplicate.
+
+def _shingles(df: DataFrame, n: int, text_col: str, *keys: str) -> DataFrame:
+    """(*keys, shingle) rows: tokenization is materialized as its own
+    projection so the n-gram lambda sees an attribute (cheap
+    per-element read), not an inlined split() re-run per gram —
+    Catalyst's CollapseProject keeps the boundary because the token
+    array is referenced more than once and isn't cheap to duplicate.
     """
-    toked = ensure_min_partitions(df).select(F.col(id_col), tokens(text_col).alias("_toks"))
-    return toked.select(
-        F.col(id_col), F.explode(word_ngrams_tokens(F.col("_toks"), n)).alias("shingle")
+    toked = ensure_min_partitions(df).select(*keys, tokens(text_col).alias("_toks"))
+    return toked.select(*keys, F.explode(word_ngrams_tokens(F.col("_toks"), n)).alias("shingle"))
+
+
+def _cap_doc_freq(items: DataFrame, key: str, max_doc_freq: int | None) -> DataFrame:
+    """Drop items whose ``key`` is seen in more than ``max_doc_freq``
+    rows (None keeps all). Count-over-window, not groupBy + self-join:
+    it shares the key shuffle the caller's pair join needs anyway, and
+    the exploded input isn't recomputed for a frequency side."""
+    if max_doc_freq is None:
+        return items
+    return (
+        items.withColumn("_df", F.count("*").over(Window.partitionBy(key)))
+        .filter(F.col("_df") <= max_doc_freq)
+        .drop("_df")
     )
+
+
+def _overlap_pairs(
+    items: DataFrame, key: str, id_col: str, n_name: str, ratio_name: str
+) -> DataFrame:
+    """Exact set overlap over (id_col, key) item rows: every pair
+    d1 < d2 sharing ≥1 key → (d1, d2, n_name = |A∩B|, ratio_name =
+    |A∩B| / |A∪B|). The key equi-join means cost scales with key
+    collisions, not N² — one co-partitioned self-join plus one
+    pair-keyed aggregation."""
+    # reused by sizes + both join sides; DISK_ONLY because the exploded
+    # item relation is corpus-sized x items per doc — an uncapped
+    # MEMORY_AND_DISK cache of it is executor memory pressure at scale
+    items = items.persist(StorageLevel.DISK_ONLY)
+    sizes = items.groupBy(id_col).agg(F.count("*").alias("_n"))
+    a = items.select(F.col(id_col).alias("d1"), key)
+    b = items.select(F.col(id_col).alias("d2"), key)
+    common = (
+        a.join(b, key)
+        .filter(F.col("d1") < F.col("d2"))
+        .groupBy("d1", "d2")
+        .agg(F.count("*").alias(n_name))
+    )
+    s1 = sizes.select(F.col(id_col).alias("d1"), F.col("_n").alias("_n1"))
+    s2 = sizes.select(F.col(id_col).alias("d2"), F.col("_n").alias("_n2"))
+    shared = F.col(n_name)
+    ratio = shared.cast("double") / (F.col("_n1") + F.col("_n2") - shared).cast("double")
+    return common.join(s1, "d1").join(s2, "d2").select("d1", "d2", n_name, ratio.alias(ratio_name))
 
 
 def jaccard_pairs(
@@ -102,42 +145,8 @@ def jaccard_pairs(
     join and the per-doc sizes, so jaccard stays a true Jaccard over
     the surviving shingle sets. Default None = exact semantics.
     """
-    sh = shingle_exploded(df, n, text_col, id_col)
-    if max_doc_freq is not None:
-        # count-over-window shares the shingle-key shuffle the pair
-        # join below needs anyway (same mechanism as the winnowing cap)
-        w = Window.partitionBy("shingle")
-        sh = (
-            sh.withColumn("_df", F.count("*").over(w))
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
-    # reused by sizes + both join sides; DISK_ONLY because the exploded
-    # shingle relation is corpus-sized x n-grams — an uncapped
-    # MEMORY_AND_DISK cache of it is executor memory pressure at scale
-    sh = sh.persist(StorageLevel.DISK_ONLY)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_shingles"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("d1"), F.col("n_shingles").alias("s1"))
-    s2 = sizes.select(F.col(id_col).alias("d2"), F.col("n_shingles").alias("s2"))
-    return (
-        common.join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "d1",
-            "d2",
-            "n_common",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("s1") + F.col("s2") - F.col("n_common")).cast("double")
-            ).alias("jaccard"),
-        )
-    )
+    sh = _cap_doc_freq(shingle_exploded(df, n, text_col, id_col), "shingle", max_doc_freq)
+    return _overlap_pairs(sh, "shingle", id_col, "n_common", "jaccard")
 
 
 def jaccard_pairs_canonical(
@@ -203,16 +212,11 @@ def jaccard_pairs_canonical(
         )
     )
 
-    rep_shingles = shingle_exploded(reps, n, text_col, "_rep")
-    if max_doc_freq is not None:
-        # same surviving-set semantics as the rep join above, so the
-        # intra-group n_common matches what cross-group pairs report
-        wdf = Window.partitionBy("shingle")
-        rep_shingles = (
-            rep_shingles.withColumn("_df", F.count("*").over(wdf))
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
+    # same surviving-set semantics as the rep join above, so the
+    # intra-group n_common matches what cross-group pairs report
+    rep_shingles = _cap_doc_freq(
+        shingle_exploded(reps, n, text_col, "_rep"), "shingle", max_doc_freq
+    )
     rep_sizes = rep_shingles.groupBy("_rep").agg(F.count("*").alias("n_common"))
     sized_groups = reps.join(rep_sizes, "_rep").select("_fp", "n_common")
     ix = members.select(F.col("_fp"), F.col(id_col).alias("_id1"))
@@ -248,12 +252,58 @@ def minhash_signatures_wide(
     at 100 TB, where k× row inflation would k× the shuffle.
     Output: wide (doc_id, sig_0..sig_{k-1}).
     """
-    sh = shingle_exploded(df, n, text_col, id_col)
+    return _signatures(df, n, k, text_col, id_col)
+
+
+def _signatures(df: DataFrame, n: int, k: int, text_col: str, id_col: str, *carry: str) -> DataFrame:
+    """Wide (id_col, *carry, sig_0..sig_{k-1}) — the one shingle → sign
+    aggregation; ``carry`` columns must be functionally dependent on
+    the id, so riding the groupBy key is free."""
     aggs = [
         F.min(F.md5(F.concat_ws("|", F.lit(str(i)), F.col("shingle")))).alias(f"sig_{i}")
         for i in range(k)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return _shingles(df, n, text_col, id_col, *carry).groupBy(id_col, *carry).agg(*aggs)
+
+
+def _banded(wide: DataFrame, k: int, bands: int, *keep: str) -> DataFrame:
+    """(*keep, band, band_hash) from wide signatures: band b hashes
+    md5 of the '|'-joined digests sig_{b·rows}..sig_{(b+1)·rows-1}
+    (band index = floor(seed / rows) on both engines), straight from
+    the wide columns — no extra shuffle."""
+    rows = k // bands
+    stack_args = ", ".join(
+        "{b}, md5(concat_ws('|', {cols}))".format(
+            b=b, cols=", ".join(f"sig_{i}" for i in range(b * rows, (b + 1) * rows))
+        )
+        for b in range(bands)
+    )
+    return wide.select(*keep, F.expr(f"stack({bands}, {stack_args}) AS (band, band_hash)"))
+
+
+def _lsh_pairs(left, right, k: int, l_id: str, r_id: str, id_col: str) -> DataFrame:
+    """Band-bucket join of two (banded, wide) sides → (l_id, r_id,
+    est_jaccard): pairs sharing ≥1 (band, band_hash) bucket, verified
+    by the fraction of equal signature positions — one k-term
+    expression over the two wide rows, no per-seed join."""
+    (l_banded, l_wide), (r_banded, r_wide) = left, right
+    cand = (
+        l_banded.select(F.col(id_col).alias(l_id), "band", "band_hash")
+        .join(r_banded.select(F.col(id_col).alias(r_id), "band", "band_hash"), ["band", "band_hash"])
+        .select(l_id, r_id)
+        .distinct()
+    )
+    s1 = l_wide.select(F.col(id_col).alias(l_id), *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(k)])
+    s2 = r_wide.select(F.col(id_col).alias(r_id), *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(k)])
+    matches = None
+    for i in range(k):
+        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        matches = term if matches is None else matches + term
+    return (
+        cand.join(s1, l_id)
+        .join(s2, r_id)
+        .select(l_id, r_id, (matches.cast("double") / F.lit(float(k))).alias("est_jaccard"))
+    )
 
 
 def minhash_candidate_pairs(
@@ -272,7 +322,6 @@ def minhash_candidate_pairs(
     documents × bands, and the verify step (exact Jaccard) only runs on
     survivors.
     """
-    rows = k // bands
     # corpus-scaled reuse (N rows × k digests, read by the band join's
     # two sides + both signature joins) → DISK_ONLY per the repo cache
     # policy: spill-backed, never executor memory pressure. ``wide``
@@ -283,41 +332,10 @@ def minhash_candidate_pairs(
         wide = minhash_signatures_wide(df, n, k, text_col, id_col).persist(
             StorageLevel.DISK_ONLY
         )
-    # band_hash per band straight from the wide columns (no extra shuffle);
-    # band index = floor(seed / rows) on both engines.
-    stack_args = ", ".join(
-        "{b}, md5(concat_ws('|', {cols}))".format(
-            b=b, cols=", ".join(f"sig_{i}" for i in range(b * rows, (b + 1) * rows))
-        )
-        for b in range(bands)
-    )
-    banded = wide.select(
-        F.col(id_col), F.expr(f"stack({bands}, {stack_args}) AS (band, band_hash)")
-    )
-    a, b_ = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("d1"), F.col(f"b.{id_col}").alias("d2"))
-        .distinct()
-    )
-    # estimated Jaccard = fraction of equal signature positions — one
-    # 16-term expression over the two wide rows, no per-seed join.
-    s1 = wide.select(F.col(id_col).alias("d1"), *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(k)])
-    s2 = wide.select(F.col(id_col).alias("d2"), *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(k)])
-    matches = None
-    for i in range(k):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", (matches.cast("double") / F.lit(float(k))).alias("est_jaccard"))
-    )
+    side = (_banded(wide, k, bands, id_col), wide)
+    # Catalyst pushes d1 < d2 below the distinct into the band-join
+    # condition, so each unordered pair is joined once
+    return _lsh_pairs(side, side, k, "d1", "d2", id_col).filter(F.col("d1") < F.col("d2"))
 
 
 def minhash_incremental_pairs(
@@ -346,57 +364,15 @@ def minhash_incremental_pairs(
     the id, so the extra key is free) — no corpus-sized rejoin to
     recover it. Output: (new_id, old_id, est_jaccard).
     """
-    rows = k // bands
-    toked = ensure_min_partitions(df).select(
-        F.col(id_col), F.col(new_col), tokens(text_col).alias("_toks")
-    )
-    sh = toked.select(
-        F.col(id_col),
-        F.col(new_col),
-        F.explode(word_ngrams_tokens(F.col("_toks"), n)).alias("shingle"),
-    )
-    aggs = [
-        F.min(F.md5(F.concat_ws("|", F.lit(str(i)), F.col("shingle")))).alias(f"sig_{i}")
-        for i in range(k)
-    ]
     # corpus-scaled, read by the band join + both signature joins →
     # DISK_ONLY per the repo cache policy
-    wide = sh.groupBy(id_col, new_col).agg(*aggs).persist(StorageLevel.DISK_ONLY)
-    stack_args = ", ".join(
-        "{b}, md5(concat_ws('|', {cols}))".format(
-            b=b, cols=", ".join(f"sig_{i}" for i in range(b * rows, (b + 1) * rows))
-        )
-        for b in range(bands)
-    )
-    banded = wide.select(
-        F.col(id_col), F.col(new_col), F.expr(f"stack({bands}, {stack_args}) AS (band, band_hash)")
-    )
-    new_side = banded.filter(F.col(new_col)).alias("a")
-    old_side = banded.filter(~F.col(new_col)).alias("b")
-    cand = (
-        new_side.join(
-            old_side,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.band_hash") == F.col("b.band_hash")),
-        )
-        .select(F.col(f"a.{id_col}").alias("new_id"), F.col(f"b.{id_col}").alias("old_id"))
-        .distinct()
-    )
-    s1 = wide.filter(F.col(new_col)).select(
-        F.col(id_col).alias("new_id"), *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(k)]
-    )
-    s2 = wide.filter(~F.col(new_col)).select(
-        F.col(id_col).alias("old_id"), *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(k)]
-    )
-    matches = None
-    for i in range(k):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
-    return (
-        cand.join(s1, "new_id")
-        .join(s2, "old_id")
-        .select(
-            "new_id", "old_id", (matches.cast("double") / F.lit(float(k))).alias("est_jaccard")
-        )
+    wide = _signatures(df, n, k, text_col, id_col, new_col).persist(StorageLevel.DISK_ONLY)
+    banded = _banded(wide, k, bands, id_col, new_col)
+    is_new = F.col(new_col)
+    return _lsh_pairs(
+        (banded.filter(is_new), wide.filter(is_new)),
+        (banded.filter(~is_new), wide.filter(~is_new)),
+        k, "new_id", "old_id", id_col,
     )
 
 
@@ -624,37 +600,9 @@ def fingerprint_neardup_pairs(
     drop hashes seen in more than that many documents before pairing
     (standard stop-shingle removal; AQE skew-join covers the rest).
     """
-    sel = winnow_fingerprints(df, k, text_col, id_col)
-    if max_doc_freq is not None:
-        # count-over-window, not groupBy+self-join: one shuffle on
-        # fp_hash (which the pair join below then reuses — same key),
-        # and the explode isn't recomputed for a frequency side.
-        w = Window.partitionBy("fp_hash")
-        sel = (
-            sel.withColumn("_df", F.count("*").over(w))
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
-    # same policy as jaccard_pairs: spill-only reuse of the exploded
-    # fingerprint relation, never executor memory
-    sel = sel.persist(StorageLevel.DISK_ONLY)
-    sizes = sel.groupBy(id_col).agg(F.count("*").alias("n_sel"))
-    a = sel.select(F.col(id_col).alias("d1"), "fp_hash")
-    b = sel.select(F.col(id_col).alias("d2"), "fp_hash")
-    shared = (
-        a.join(b, "fp_hash")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("shared"))
-    )
-    s1 = sizes.select(F.col(id_col).alias("d1"), F.col("n_sel").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("d2"), F.col("n_sel").alias("n2"))
-    res = F.col("shared").cast("double") / (F.col("n1") + F.col("n2") - F.col("shared")).cast("double")
-    return (
-        shared.join(s1, "d1")
-        .join(s2, "d2")
-        .select("d1", "d2", "shared", res.alias("resemblance"))
-        .filter(F.col("resemblance") >= F.lit(min_resemblance))
+    sel = _cap_doc_freq(winnow_fingerprints(df, k, text_col, id_col), "fp_hash", max_doc_freq)
+    return _overlap_pairs(sel, "fp_hash", id_col, "shared", "resemblance").filter(
+        F.col("resemblance") >= F.lit(min_resemblance)
     )
 
 
@@ -742,8 +690,11 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # byte-measured gate over the ALREADY-materialized relation (one
-    # cheap agg job; octet_length of the string rendering upper-bounds
-    # the in-driver footprint for both numeric and string ids)
+    # cheap agg job). It measures the PAYLOAD bytes of the ids' string
+    # renderings, not the driver footprint: RSS after collect() is a
+    # 20-100x multiple of that (Row/int/str objects), so 4 MiB of
+    # payload can be ~100 MB resident — DIRECT_EDGE_BOUND is only safe
+    # while it stays this small
     probe = edges.agg(
         F.sum(
             F.octet_length(F.col("s").cast("string"))
@@ -981,21 +932,6 @@ _MH_BANDS = "_bands"
 _MH_SIGS = "_sigs"
 
 
-def _banded(wide: DataFrame, k: int, bands: int, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, band, band_hash) from wide signatures — band_hash =
-    md5 of the '|'-joined row digests, the d5/d24 chain."""
-    rows = k // bands
-    stack_args = ", ".join(
-        "{b}, md5(concat_ws('|', {cols}))".format(
-            b=b, cols=", ".join(f"sig_{i}" for i in range(b * rows, (b + 1) * rows))
-        )
-        for b in range(bands)
-    )
-    return wide.select(
-        F.col(id_col), F.expr(f"stack({bands}, {stack_args}) AS (band, band_hash)")
-    )
-
-
 def _minhash_index_parts(
     df: DataFrame, n: int, k: int, bands: int, text_col: str, id_col: str
 ):
@@ -1076,55 +1012,28 @@ def minhash_index_probe(
     spark, shard: DataFrame, path: str, n: int = 3, k: int = 16, bands: int = 4,
     text_col: str = "text", id_col: str = "doc_id", parts=None,
 ) -> DataFrame:
-    """Near-dup a NEW shard against the persisted index: only the shard
-    is shingled; candidates come from the band-bucket join against the
-    persisted ``_bands`` (one shuffle keyed on (band, band_hash), cost
-    ~ shard × bands); the verify step joins the persisted wide
-    signatures for candidate old ids only. Output (new_id, old_id,
-    est_jaccard) — bit-identical to `minhash_incremental_pairs` over
-    the same corpus split (shared signature/band chains,
-    equivalence-tested)."""
+    """Near-dup a NEW shard against the persisted index: the corpus is
+    never shingled — only the shard is, and not even that when
+    ``parts`` brings its (banded, wide) signatures from
+    `_minhash_index_parts`. Candidates come from the band-bucket join
+    against the persisted ``_bands`` (one shuffle keyed on (band,
+    band_hash), cost ~ shard × bands); the verify step joins the
+    persisted wide signatures for candidate old ids only. Output
+    (new_id, old_id, est_jaccard) — bit-identical to
+    `minhash_incremental_pairs` over the same corpus split: both run
+    the one `_signatures` → `_banded` → `_lsh_pairs` chain
+    (equivalence-tested)."""
     import os
 
     from .manifest import ManifestTable
 
-    sh_banded, sh_wide = parts if parts is not None else _minhash_index_parts(
+    shard_side = parts if parts is not None else _minhash_index_parts(
         shard, n, k, bands, text_col, id_col
     )
-    old_bands = (
-        ManifestTable(os.path.join(path, _MH_BANDS))
-        .read(spark)
-        .select(F.col(id_col).alias("old_id"), "band", "band_hash")
+    index_side = tuple(
+        ManifestTable(os.path.join(path, t)).read(spark) for t in (_MH_BANDS, _MH_SIGS)
     )
-    cand = (
-        sh_banded.select(F.col(id_col).alias("new_id"), "band", "band_hash")
-        .join(old_bands, ["band", "band_hash"])
-        .select("new_id", "old_id")
-        .distinct()
-    )
-    s1 = sh_wide.select(
-        F.col(id_col).alias("new_id"), *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(k)]
-    )
-    s2 = (
-        ManifestTable(os.path.join(path, _MH_SIGS))
-        .read(spark)
-        .select(
-            F.col(id_col).alias("old_id"),
-            *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(k)],
-        )
-    )
-    matches = None
-    for i in range(k):
-        term = F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        matches = term if matches is None else matches + term
-    return (
-        cand.join(s1, "new_id")
-        .join(s2, "old_id")
-        .select(
-            "new_id", "old_id",
-            (matches.cast("double") / F.lit(float(k))).alias("est_jaccard"),
-        )
-    )
+    return _lsh_pairs(shard_side, index_side, k, "new_id", "old_id", id_col)
 
 
 def forget_fingerprint_registry(

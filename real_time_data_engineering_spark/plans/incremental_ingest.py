@@ -78,7 +78,6 @@ from pyspark.sql import functions as F
 
 from ..functions.text import est_bpe_tokens
 from ..operators import dedup as D
-from ..operators.dedup import _MH_BANDS, _MH_SIGS  # noqa: F401  (layout doc)
 from ..operators.manifest import ManifestTable
 from .curation_pipeline import EVAL_MOD, _quality_score, temperature_sample_and_shard
 
@@ -208,11 +207,12 @@ def ingest_shard(
     Scale shape per pass: every stage touches SHARD-sized data plus
     index metadata — fingerprints via one shard projection + a
     registry join; near-dup via ONE shard shingling pass shared by the
-    within-shard band join, the persisted-band probe and the index
-    append; gates/probe/decontam are narrow projections (the decontam
-    candidates come from the stats-pruned postings probe); appends are
-    CAS manifest commits (racing loaders rebase + retry). The corpus
-    is never re-read."""
+    within-shard band join, the persisted-band probe (from the second
+    pass on) and the index append, its signatures cached until
+    connected components has checkpointed the edges; gates/probe/
+    decontam are narrow projections (the decontam candidates come from
+    the stats-pruned postings probe); appends are CAS manifest commits
+    (racing loaders rebase + retry). The corpus is never re-read."""
     from ..operators.quality import (
         gopher_quality_rules,
         load_probe,
@@ -301,11 +301,8 @@ def ingest_shard(
             .select("new_id", F.col("root").alias("old_root"))
             .distinct()
         )
-    if bootstrap:
-        D.write_minhash_index(new_docs, p["minhash"], **_MINHASH_PARAMS)
-    else:
-        D.append_minhash_index(new_docs, p["minhash"], **_MINHASH_PARAMS, parts=parts)
-    parts[1].unpersist(blocking=False)
+    # an append to the empty bootstrap index commits what a write would
+    D.append_minhash_index(new_docs, p["minhash"], **_MINHASH_PARAMS, parts=parts)
 
     # connected components over the CONTRACTED graph: within-shard pairs
     # plus (shard doc ↔ existing cluster keeper) edges — contraction
@@ -315,6 +312,8 @@ def ingest_shard(
         cross.select(F.col("new_id").alias("d1"), F.col("old_root").alias("d2"))
     )
     comp = D.connected_components(edges).select("node", "cluster_id")
+    # CC checkpoints the edges eagerly, so the signatures are spent
+    parts[1].unpersist(blocking=False)
     q_new = _quality_score(new_docs).localCheckpoint(eager=True)
 
     old_roots = (

@@ -165,7 +165,8 @@ def neardup_filter_stream(
       duplicate-insensitive, so the non-distinct shingle array yields
       the identical signature to the batch distinct-explode-groupBy,
       without a streaming aggregation before the stateful op);
-    * band hashes are the same ``md5(concat_ws('|', sig…))``;
+    * buckets come from the batch banding itself (`operators.dedup._banded`,
+      the ``stack`` that d5/d24/d46 band with);
     * the flag predicate ("∃ earlier doc sharing a band with full-
       signature est ≥ τ") is the batch `minhash_candidate_pairs`
       filter — bucket-mates ARE candidates and vice versa.
@@ -191,8 +192,8 @@ def neardup_filter_stream(
     single-batch replay is arrival-order-independent.
     """
     from ..functions.text import tokens, word_ngrams_tokens
+    from ..operators.dedup import _banded
 
-    rows = k // bands
     arr = word_ngrams_tokens(tokens(F.col(text_col)), n)
 
     def sig(i: int):
@@ -219,22 +220,7 @@ def neardup_filter_stream(
         .select("doc_id", "_ts", *[sig(i).alias(f"sig_{i}") for i in range(k)])
     )
     sigcat = F.concat_ws("|", *[F.col(f"sig_{i}") for i in range(k)])
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(f"sig_{i}") for i in range(b * rows, (b + 1) * rows)])
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    exploded = wide.select(
-        "doc_id", "_ts", sigcat.alias("sigcat"), F.explode(band_structs).alias("bb")
-    ).select(
-        "doc_id", "_ts", "sigcat", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
-    )
+    exploded = _banded(wide.withColumn("sigcat", sigcat), k, bands, "doc_id", "_ts", "sigcat")
     thr = float(threshold)
     kk = int(k)
 

@@ -78,6 +78,10 @@ def all_plans(spark):
     from real_time_data_engineering_spark.registry import all_specs
 
     specs = all_specs()
+    # an InMemoryRelation another test already materialized prints its
+    # final plan and re-costs the joins above it, so plan shapes (and
+    # Exchange counts) would depend on which tests ran first
+    spark.catalog.clearCache()
 
     def plan_of(item):
         name, spec = item

@@ -142,11 +142,25 @@ def test_recrawl_dups_are_caught_across_passes(spark, tmp_path):
     assert _ids(I.stage_sets(spark, state_dir)["decontaminated"]) == before
 
 
-def test_bridge_merge_retires_previous_keeper(spark, tmp_path):
+def test_bridge_merge_retires_previous_keeper(spark, tmp_path, monkeypatch):
     """A shard-2 doc near-dup of a kept shard-1 doc with HIGHER quality
     must take over the cluster (the previously-kept keeper is retired),
     matching the batch keeper choice — the case a naive
-    first-ingested-wins incremental dedup gets wrong."""
+    first-ingested-wins incremental dedup gets wrong.
+
+    Both passes also sign the shard ONCE: the edge plan connected
+    components receives reads the cached shard signatures, not a
+    re-shingle of the shard."""
+    from real_time_data_engineering_spark.operators import dedup as D
+
+    edge_plans = []
+    real_cc = D.connected_components
+
+    def spy(pairs, *args, **kwargs):
+        edge_plans.append(pairs._jdf.queryExecution().executedPlan().toString())
+        return real_cc(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(D, "connected_components", spy)
     base_text = (
         "the quick brown fox jumps over the lazy dog and then runs far "
         "away into the quiet green field before it rests for a while"
@@ -162,6 +176,8 @@ def test_bridge_merge_retires_previous_keeper(spark, tmp_path):
     kept1 = _ids(I.stage_sets(spark, state_dir)["neardup_keep"])
     assert kept1 == {1, 2}
     rep = I.ingest_shard(spark, state_dir, s2, phrases=PHRASES)
+    assert len(edge_plans) == 2
+    assert all("InMemoryTableScan" in plan for plan in edge_plans), edge_plans
     kept2 = _ids(I.stage_sets(spark, state_dir)["neardup_keep"])
     # doc 10 only wins if it actually collides AND scores higher; either
     # way incremental must equal the batch ladder over the union

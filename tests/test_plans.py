@@ -375,6 +375,29 @@ def test_no_registered_query_plans_a_cartesian_product(all_plans):
             )
 
 
+def test_set_similarity_pair_queries_keep_their_exchange_budget(all_plans):
+    """The pair queries built on the shared set-similarity core
+    (overlap join, doc-frequency cap, MinHash sign → band → estimate)
+    may not plan more Exchanges than before those helpers were shared —
+    one more shuffle in the core multiplies across every rung. Budgets
+    are the counts the per-call copies planned, compiled over a cleared
+    cache like ``all_plans`` is."""
+    budget = {
+        "d2_ngram_jaccard_topk": 55,
+        "d5_minhash_lsh": 12,
+        "d8_fingerprint_neardup": 14,
+        "d21_simhash_neardup": 5,
+        "d24_incremental_neardup": 12,
+        "d29_editdist_verify": 16,
+    }
+    over = {
+        name: (all_plans[name].count("Exchange"), cap)
+        for name, cap in budget.items()
+        if all_plans[name].count("Exchange") > cap
+    }
+    assert not over, f"(exchanges, budget) over budget: {over}"
+
+
 def test_bench_contention_guard_detects_live_jvm(spark):
     """bench.py's contention guard must see the live JVM this test
     session is running — if it can't detect THIS process's Spark, it
